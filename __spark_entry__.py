@@ -156,11 +156,11 @@ def _kg_snapshot_roundtrip(spark, sf_dir):
 
 
 def _kg_candidates(spark, sf_dir):
-    from list_extractor_spark.engine.extract import extract_candidates
+    from list_extractor_spark.engine.extract import extract_candidates_arrow
 
     snaps = make_snapshots()
     keys = {(lang, s) for (lang, s, w, r) in snaps["mention_index"]}
-    return extract_candidates(_fixture_documents(spark), linkable_keys=keys).select(
+    return extract_candidates_arrow(_fixture_documents(spark), linkable_keys=keys).select(
         "doc_id", "subj", "pred", "obj", "obj_dt", "link_lang", "link_surface"
     )
 

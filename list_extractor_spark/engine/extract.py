@@ -2,8 +2,9 @@
 
 Replaces the reference's serial per-page loop (listExtractor.py:122-142:
 JVM subprocess per page + HTTP per element) with ONE Arrow-batched
-``mapInPandas`` pass that fuses parse (P1-P3), rule dispatch (D1-D3) and the
-mapper cascade (M1-M15) per document:
+``mapInArrow`` pass that fuses parse (P1-P3), rule dispatch (D1-D3) and the
+mapper cascade (M1-M15) per document.  Batch and streaming run the same
+kernel; the parse-only and metrics stages share its span decode:
 
   * the span array stays whole inside one row, so the section-title state
     machine folds in document order with no shuffle and no explode;
@@ -15,29 +16,22 @@ mapper cascade (M1-M15) per document:
     (engine/bloom.py) the pipeline defaults to — URI *resolution* is left
     to the downstream broadcast-hash join (engine/linking.py): at full scale
     only a fixed-size bitmap ships to executors, never the index rows.
-
-Scale note: mega "List of ..." pages make single heavy rows.  The stage
-optionally pre-distributes by span count (repartitionByRange on n_spans) so a
-few hub documents don't serialize one task; AQE handles residual skew.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.extractors import dbr_ns, list_elem_clean
-from ..core.links import DeferredLinker, Linker, split_sentinel
+from ..core.links import DeferredLinker, split_sentinel
 from ..core.mappers import _mint, extract_document
 from ..core.parser import parse_spans
 from .schemas import CANDIDATES_SCHEMA, ITEMS_SCHEMA, METRICS_SCHEMA
 
-
-def _spans_from_cell(cell):
-    # Arrow hands the array<struct> column as a numpy array of dicts
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in cell]
+_DOC_COLS = ("doc_id", "lang", "res_class", "res_classes", "res_target")
+_SPAN_FIELDS = ("kind", "text", "media_ref", "offset")
 
 
 def _sentinel_parts(subj: str):
@@ -53,155 +47,69 @@ def _sentinel_parts(subj: str):
     return ll, ls, _mint(list_elem_clean(ls), dbr_ns(ll))
 
 
-def extract_candidates(
-    documents: DataFrame,
-    linkable_keys=None,
-    full_linker: Linker | None = None,
-    skew_repartition: bool = False,
-) -> DataFrame:
-    """documents(doc_id, lang, res_class, spans[, res_target]) -> candidates.
-
-    ``linkable_keys``: broadcastable set of (lang, surface) mention keys; link
-    resolution is deferred to the join stage via sentinels.  Passing
-    ``full_linker`` instead resolves in-UDF (used by small-scale parity runs).
-    ``res_target``: optional redirect-resolved page id (defaults to doc_id).
-    """
-    sc = documents.sparkSession.sparkContext
-    if full_linker is not None:
-        b_linker = sc.broadcast(full_linker)
-        deferred = False
-    else:
-        b_linker = sc.broadcast(
-            DeferredLinker(linkable_keys if linkable_keys is not None else set())
-        )
-        deferred = True
-
+def _kernel_input(documents: DataFrame) -> DataFrame:
+    """Project the columns the kernels read.  ``res_target`` (the
+    redirect-resolved page id) defaults to doc_id; ``res_classes`` (the -c
+    classname override, or the page_types classes) defaults to [res_class]."""
     if "res_target" not in documents.columns:
         documents = documents.withColumn("res_target", F.col("doc_id"))
     if "res_classes" not in documents.columns:
         documents = documents.withColumn("res_classes", F.array("res_class"))
-
-    if skew_repartition:
-        documents = documents.withColumn("n_spans", F.size("spans")).repartitionByRange(
-            "n_spans", "doc_id"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        linker = b_linker.value
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "subj": [],
-                "pred": [],
-                "obj": [],
-                "obj_dt": [],
-                "link_lang": [],
-                "link_surface": [],
-                "link_fallback": [],
-            }
-            for doc_id, lang, res_class, spans, res_target in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_classes"], pdf["spans"], pdf["res_target"]
-            ):
-                res_class = list(res_class)
-                triples, _stats = extract_document(
-                    res_target, res_class, lang, _spans_from_cell(spans), linker
-                )
-                for s, p, o, dt in triples:
-                    ll, ls, lf = (
-                        _sentinel_parts(s) if deferred else (None, None, None)
-                    )
-                    out["doc_id"].append(doc_id)
-                    out["subj"].append(s)
-                    out["pred"].append(p)
-                    out["obj"].append(o)
-                    out["obj_dt"].append(dt)
-                    out["link_lang"].append(ll)
-                    out["link_surface"].append(ls)
-                    out["link_fallback"].append(lf)
-            yield pd.DataFrame(out)
-
-    cols = [F.col(f.name) for f in CANDIDATES_SCHEMA.fields]
-    return documents.mapInPandas(run, schema=CANDIDATES_SCHEMA).select(*cols)
+    return documents.select(*_DOC_COLS, "spans")
 
 
-def extract_candidates_arrow(
-    documents: DataFrame,
-    linkable_keys=None,
-    skew_repartition: bool = False,
-) -> DataFrame:
-    """mapInArrow fast path of extract_candidates.
+def _decode(batch: pa.RecordBatch):
+    """One Arrow batch -> per-document (doc_id, lang, res_class, res_classes,
+    res_target, spans), spans as (kind, text, media_ref, offset) tuples.
 
-    mapInPandas materializes every span as a Python dict (pyarrow nested
-    struct -> pandas object column) — measured as a large share of worker CPU.
-    Here the ListArray<Struct> column is flattened ONCE per batch into four
-    primitive child arrays, and per-document slices are zipped directly:
-    same semantics, same output, ~no per-span object churn.
-    """
-    import pyarrow as pa
+    The ListArray<Struct> spans column is flattened ONCE per batch into its
+    four primitive children, read by field name, and sliced per document by
+    the list offsets: no per-span object churn.  Spark writes a NULL spans
+    cell as an empty offset range, so that document decodes with no spans."""
+    spans = batch.column("spans")
+    off = spans.offsets.to_pylist()
+    child = spans.values
+    span_rows = list(zip(*(child.field(f).to_pylist() for f in _SPAN_FIELDS)))
+    cols = (batch.column(c).to_pylist() for c in _DOC_COLS)
+    for r, doc in enumerate(zip(*cols)):
+        yield (*doc, span_rows[off[r]:off[r + 1]])
 
-    sc = documents.sparkSession.sparkContext
-    b_linker = sc.broadcast(
+
+def _to_batch(rows: list, schema: pa.Schema) -> pa.RecordBatch:
+    cols = zip(*rows) if rows else ([] for _ in schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
+def _broadcast_linker(documents: DataFrame, linkable_keys):
+    return documents.sparkSession.sparkContext.broadcast(
         DeferredLinker(linkable_keys if linkable_keys is not None else set())
     )
 
-    if "res_target" not in documents.columns:
-        documents = documents.withColumn("res_target", F.col("doc_id"))
-    if "res_classes" not in documents.columns:
-        documents = documents.withColumn("res_classes", F.array("res_class"))
-    documents = documents.select("doc_id", "lang", "res_classes", "res_target", "spans")
-    if skew_repartition:
-        documents = documents.withColumn("n_spans", F.size("spans")).repartitionByRange(
-            "n_spans", "doc_id"
-        ).drop("n_spans")
 
-    out_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("subj", pa.string()),
-            ("pred", pa.string()),
-            ("obj", pa.string()),
-            ("obj_dt", pa.string()),
-            ("link_lang", pa.string()),
-            ("link_surface", pa.string()),
-            ("link_fallback", pa.string()),
-        ]
-    )
+def extract_candidates_arrow(documents: DataFrame, linkable_keys=None) -> DataFrame:
+    """documents(doc_id, lang, res_class, spans[, res_target, res_classes])
+    -> candidates (CANDIDATES_SCHEMA).
+
+    ``linkable_keys``: broadcastable set (or Bloom filter) of (lang, surface)
+    mention keys; link resolution is deferred to the join stage via
+    sentinels, decomposed here into link_lang/link_surface/link_fallback.
+    """
+    b_linker = _broadcast_linker(documents, linkable_keys)
+    out_schema = to_arrow_schema(CANDIDATES_SCHEMA)
 
     def run(batches):
         linker = b_linker.value
         for batch in batches:
-            cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-            doc_ids = cols["doc_id"].to_pylist()
-            langs = cols["lang"].to_pylist()
-            classes = cols["res_classes"].to_pylist()
-            targets = cols["res_target"].to_pylist()
-            spans_col = cols["spans"]
-            off = spans_col.offsets.to_pylist()
-            child = spans_col.values
-            kinds = child.field(0).to_pylist()
-            texts = child.field(1).to_pylist()
-            medias = child.field(2).to_pylist()
-            offs = child.field(3).to_pylist()
-            out = {k: [] for k in out_schema.names}
-            for r in range(batch.num_rows):
-                s, e = off[r], off[r + 1]
-                spans = list(zip(kinds[s:e], texts[s:e], medias[s:e], offs[s:e]))
-                triples, _ = extract_document(
-                    targets[r], list(classes[r]), langs[r], spans, linker
-                )
+            rows = []
+            for doc_id, lang, _cls, classes, target, spans in _decode(batch):
+                triples, _ = extract_document(target, classes, lang, spans, linker)
                 for subj, pred, obj, dt in triples:
-                    ll, ls, lf = _sentinel_parts(subj)
-                    out["doc_id"].append(doc_ids[r])
-                    out["subj"].append(subj)
-                    out["pred"].append(pred)
-                    out["obj"].append(obj)
-                    out["obj_dt"].append(dt)
-                    out["link_lang"].append(ll)
-                    out["link_surface"].append(ls)
-                    out["link_fallback"].append(lf)
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+                    rows.append((doc_id, subj, pred, obj, dt, *_sentinel_parts(subj)))
+            yield _to_batch(rows, out_schema)
 
-    return documents.mapInArrow(run, schema=CANDIDATES_SCHEMA)
+    return _kernel_input(documents).mapInArrow(run, schema=CANDIDATES_SCHEMA)
 
 
 def parse_items(documents: DataFrame) -> DataFrame:
@@ -210,58 +118,41 @@ def parse_items(documents: DataFrame) -> DataFrame:
     Used for the per-row parse-invariant check and as the resumability
     boundary mirroring the reference's resDict debug dump (utilities.py:101-153).
     """
+    out_schema = to_arrow_schema(ITEMS_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k.name: [] for k in ITEMS_SCHEMA.fields}
-            for doc_id, lang, res_class, spans in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_class"], pdf["spans"]
-            ):
-                res_dict = parse_spans(_spans_from_cell(spans), lang)
-                for section_path, items in res_dict.items():
+    def run(batches):
+        for batch in batches:
+            rows = []
+            for doc_id, lang, res_class, _classes, _target, spans in _decode(batch):
+                for section_path, items in parse_spans(spans, lang).items():
                     for idx, item in enumerate(items):
                         nested = isinstance(item, list)
-                        texts = item if nested else [item]
-                        for t in texts:
-                            rows["doc_id"].append(doc_id)
-                            rows["lang"].append(lang)
-                            rows["res_class"].append(res_class)
-                            rows["section_path"].append(section_path)
-                            rows["item_idx"].append(idx)
-                            rows["depth"].append(2 if nested else 1)
-                            rows["item_text"].append(t)
-            yield pd.DataFrame(rows)
+                        for t in item if nested else [item]:
+                            rows.append((doc_id, lang, res_class, section_path, idx,
+                                         2 if nested else 1, t))
+            yield _to_batch(rows, out_schema)
 
-    return documents.mapInPandas(run, schema=ITEMS_SCHEMA)
+    return _kernel_input(documents).mapInArrow(run, schema=ITEMS_SCHEMA)
 
 
 def extract_metrics(documents: DataFrame, linkable_keys=None) -> DataFrame:
     """Per-document extraction stats (the reference's evaluate() numbers,
     utilities.py:319-346), computed in the same narrow pass shape.  Honors a
-    ``res_classes`` override column the same way extract_candidates does (so
-    a -c classname override counts what the pipeline actually extracts)."""
-    sc = documents.sparkSession.sparkContext
-    b_linker = sc.broadcast(
-        DeferredLinker(linkable_keys if linkable_keys is not None else set())
-    )
-    if "res_classes" not in documents.columns:
-        documents = documents.withColumn("res_classes", F.array("res_class"))
+    ``res_classes`` override column the same way extract_candidates_arrow
+    does (so a -c classname override counts what the pipeline actually
+    extracts)."""
+    b_linker = _broadcast_linker(documents, linkable_keys)
+    out_schema = to_arrow_schema(METRICS_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         linker = b_linker.value
-        for pdf in batches:
-            rows = {k.name: [] for k in METRICS_SCHEMA.fields}
-            for doc_id, lang, res_class, spans in zip(
-                pdf["doc_id"], pdf["lang"], pdf["res_classes"], pdf["spans"]
-            ):
+        for batch in batches:
+            rows = []
+            for doc_id, lang, _cls, classes, _target, spans in _decode(batch):
                 triples, (n_sections, n_items, n_extracted) = extract_document(
-                    doc_id, list(res_class), lang, _spans_from_cell(spans), linker
+                    doc_id, classes, lang, spans, linker
                 )
-                rows["doc_id"].append(doc_id)
-                rows["n_sections"].append(n_sections)
-                rows["n_items"].append(n_items)
-                rows["n_extracted"].append(n_extracted)
-                rows["n_triples"].append(len(triples))
-            yield pd.DataFrame(rows)
+                rows.append((doc_id, n_sections, n_items, n_extracted, len(triples)))
+            yield _to_batch(rows, out_schema)
 
-    return documents.mapInPandas(run, schema=METRICS_SCHEMA)
+    return _kernel_input(documents).mapInArrow(run, schema=METRICS_SCHEMA)

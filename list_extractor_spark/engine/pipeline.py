@@ -1,6 +1,6 @@
 """End-to-end KG-construction pipeline with checkpointed, resumable stages.
 
-    documents ──①redirect join──②extract (narrow mapInPandas)──③link join──
+    documents ──①redirect join──②extract (narrow mapInArrow)──③link join──
     ──④canonicalize──⑤dedup + materialize (partitioned parquet + lineage)
 
 Stage outputs land under ``run_dir/<stage>/`` as parquet with Spark's
@@ -75,12 +75,10 @@ class Pipeline:
         spark: SparkSession,
         run_dir: str | None = None,
         salt: int | None = None,  # None = size-adaptive link join
-        skew_repartition: bool = False,
     ):
         self.spark = spark
         self.run_dir = run_dir
         self.salt = salt
-        self.skew_repartition = skew_repartition
         self._lineage: list[dict] = []
 
     # -- checkpoint helpers ------------------------------------------------
@@ -140,11 +138,7 @@ class Pipeline:
             if page_types is not None:
                 docs = attach_page_types(docs, page_types)
             candidates = self._checkpoint(
-                extract_candidates_arrow(
-                    docs, linkable_keys=linkable_keys,
-                    skew_repartition=self.skew_repartition,
-                ),
-                "candidates",
+                extract_candidates_arrow(docs, linkable_keys=linkable_keys), "candidates"
             )
 
         if self._is_done("linked"):
@@ -188,12 +182,11 @@ def run_pipeline(
     run_dir: str | None = None,
     canonicalize: bool = True,
     salt: int | None = None,
-    skew_repartition: bool = False,
     use_page_types: bool = False,
 ) -> DataFrame:
     """Convenience wrapper: snapshots dict -> DataFrames -> Pipeline.run."""
     mention_index, sameas, redirects = snapshots_to_dfs(spark, snapshots)
-    pipe = Pipeline(spark, run_dir=run_dir, salt=salt, skew_repartition=skew_repartition)
+    pipe = Pipeline(spark, run_dir=run_dir, salt=salt)
     return pipe.run(
         documents,
         mention_index,

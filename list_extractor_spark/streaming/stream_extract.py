@@ -4,21 +4,21 @@ The reference is strictly batch (one serial run per class,
 listExtractor.py:104-146).  A production corpus arrives continuously, so the
 engine also exposes the extract stage as a Structured Streaming flow:
 
-    readStream(parquet span docs) -> mapInPandas extract (same core) ->
-    broadcast link join -> append sink
+    readStream(parquet span docs) -> mapInArrow extract -> broadcast link
+    join -> append sink
 
 The extract stage is stateless per document, so it streams unchanged — the
-same narrow mapInPandas plan, incrementally executed per micro-batch.  The
-dedup/canonicalize stages are batch post-passes over the sink (set semantics
-need global state); watermarked windowed aggregation is demonstrated on the
-events stream for the late-data pattern.
+batch pipeline's own mapInArrow kernel (engine/extract.py), incrementally
+executed per micro-batch.  The dedup/canonicalize stages are batch post-passes
+over the sink (set semantics need global state); watermarked windowed
+aggregation is demonstrated on the events stream for the late-data pattern.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..engine.extract import extract_candidates
+from ..engine.extract import extract_candidates_arrow
 from ..engine.linking import resolve_links
 from ..engine.schemas import DOCUMENTS_SCHEMA
 
@@ -30,6 +30,24 @@ def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 4)
         .parquet(input_dir)
     )
+
+
+def linked_triples(
+    docs_stream: DataFrame,
+    mention_index: DataFrame,
+    sameas: DataFrame,
+    linkable_keys,
+    canonical_map: DataFrame | None = None,
+) -> DataFrame:
+    """The per-micro-batch plan both sinks run: extract, link join, and the
+    optional in-stream canonical apply."""
+    from ..engine.canonicalize import apply_canonical_df
+
+    candidates = extract_candidates_arrow(docs_stream, linkable_keys=linkable_keys)
+    triples = resolve_links(candidates, mention_index, sameas)
+    if canonical_map is not None:
+        triples = apply_canonical_df(triples, canonical_map)
+    return triples
 
 
 def stream_triples(
@@ -52,12 +70,9 @@ def stream_triples(
     cadence, not per batch).  Global triple DEDUP stays a batch post-pass
     over the sink: set semantics need global state the append stream cannot
     hold."""
-    from ..engine.canonicalize import apply_canonical_df
-
-    candidates = extract_candidates(docs_stream, linkable_keys=linkable_keys)
-    triples = resolve_links(candidates, mention_index, sameas)
-    if canonical_map is not None:
-        triples = apply_canonical_df(triples, canonical_map)
+    triples = linked_triples(
+        docs_stream, mention_index, sameas, linkable_keys, canonical_map
+    )
     writer = (
         triples.writeStream.format("parquet")
         .option("path", output_dir)
@@ -95,13 +110,11 @@ def stream_triples_versioned(
     Readers are never blocked and never see a half batch: the ``current``
     pointer flips once per batch, after the batch's files are fully
     written."""
-    from ..engine.canonicalize import apply_canonical_df
     from ..engine.snapshots import marker_committed, write_graph_snapshot
 
-    candidates = extract_candidates(docs_stream, linkable_keys=linkable_keys)
-    triples = resolve_links(candidates, mention_index, sameas)
-    if canonical_map is not None:
-        triples = apply_canonical_df(triples, canonical_map)
+    triples = linked_triples(
+        docs_stream, mention_index, sameas, linkable_keys, canonical_map
+    )
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         marker = f"batch-{batch_id}"

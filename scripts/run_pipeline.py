@@ -7,7 +7,7 @@ Cluster usage (north_rule: spark-submit --py-files on a multi-executor cluster):
         --input  /data/documents_parquet \
         --snapshots /data/snapshots \
         --output /data/graph \
-        --run-dir /data/runs/run1 [--salt 8] [--skew-repartition]
+        --run-dir /data/runs/run1 [--salt 8]
 
 Local smoke (no cluster):
 
@@ -49,7 +49,6 @@ def main():
         "--salt", type=int, default=None,
         help="link-join salt factor (default: size-adaptive; 0 forces broadcast)",
     )
-    ap.add_argument("--skew-repartition", action="store_true")
     ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument("--turtle", default=None, help="also write a .ttl parity file")
     ap.add_argument("--demo", action="store_true", help="use the synthetic fixture corpus")
@@ -88,9 +87,7 @@ def main():
             os.path.join(args.snapshots, "redirects")
         )
 
-    pipe = Pipeline(
-        spark, run_dir=args.run_dir, salt=args.salt, skew_repartition=args.skew_repartition
-    )
+    pipe = Pipeline(spark, run_dir=args.run_dir, salt=args.salt)
     t0 = time.time()
     triples = pipe.run(
         documents, mention_index, sameas, redirects,

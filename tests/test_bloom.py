@@ -66,7 +66,7 @@ def test_pipeline_bloom_path_matches_oracle_exactly(spark):
 def test_false_positive_degrades_to_minted_fallback(spark):
     """A deferred mention the index cannot resolve (forced here by passing a
     superset key set) must emit the minted fallback IRI, not a sentinel."""
-    from list_extractor_spark.engine.extract import extract_candidates
+    from list_extractor_spark.engine.extract import extract_candidates_arrow
     from list_extractor_spark.engine.linking import resolve_links
     from list_extractor_spark.engine.pipeline import snapshots_to_dfs
 
@@ -77,7 +77,7 @@ def test_false_positive_degrades_to_minted_fallback(spark):
     keys = {(lang, s) for (lang, s, _w, _r) in snapshots["mention_index"]}
     fake_fp_keys = keys | {("en", f"{{{{Ref {w} {n}}}}}") for w in ["Silver", "Night", "Iron"]
                            for n in ["Road", "Garden", "Mirror", "Empire"]}
-    cand = extract_candidates(docs, linkable_keys=fake_fp_keys)
+    cand = extract_candidates_arrow(docs, linkable_keys=fake_fp_keys)
     mention_index, sameas, _ = snapshots_to_dfs(spark, snapshots)
     out = resolve_links(cand, mention_index, sameas)
     subs = [r["subj"] for r in out.select("subj").collect()]

@@ -4,13 +4,21 @@ per-row parse invariant, parallelism invariance, canonicalization agreement
 and kill-and-resume reproducibility."""
 
 import shutil
+from collections import Counter
 
 import pytest
+from pyspark.sql import types as T
 
+from list_extractor_spark.core.links import DeferredLinker
+from list_extractor_spark.core.mappers import extract_document
 from list_extractor_spark.core.parser import parse_spans
-from list_extractor_spark.engine.extract import parse_items
+from list_extractor_spark.engine.extract import (
+    _sentinel_parts,
+    extract_candidates_arrow,
+    parse_items,
+)
 from list_extractor_spark.engine.pipeline import Pipeline, run_pipeline, snapshots_to_dfs
-from list_extractor_spark.engine.schemas import DOCUMENTS_SCHEMA
+from list_extractor_spark.engine.schemas import DOCUMENTS_SCHEMA, SPAN_STRUCT
 from list_extractor_spark.fixtures import corpus_to_rows, make_corpus, make_snapshots
 from list_extractor_spark.fixtures.oracle import oracle_triples
 
@@ -25,6 +33,11 @@ def corpus():
 @pytest.fixture(scope="module")
 def snapshots():
     return make_snapshots()
+
+
+@pytest.fixture(scope="module")
+def link_keys(snapshots):
+    return {(lang, s) for (lang, s, w, r) in snapshots["mention_index"]}
 
 
 @pytest.fixture(scope="module")
@@ -83,14 +96,6 @@ def test_salted_link_join_same_result(spark, corpus, snapshots, documents_df):
     plain = _collect_triples(run_pipeline(spark, documents_df, snapshots, salt=0))
     salted = _collect_triples(run_pipeline(spark, documents_df, snapshots, salt=4))
     assert plain == salted
-
-
-def test_skew_repartition_same_result(spark, corpus, snapshots, documents_df):
-    base = _collect_triples(run_pipeline(spark, documents_df, snapshots))
-    skewed = _collect_triples(
-        run_pipeline(spark, documents_df, snapshots, skew_repartition=True)
-    )
-    assert base == skewed
 
 
 def test_canonicalization_spark_matches_oracle(spark, snapshots):
@@ -243,19 +248,60 @@ def test_resume_reproduces_identical_triples(spark, corpus, snapshots, documents
     assert any(s["stage"] == "candidates" and s["reused"] for s in pipe.lineage)
 
 
-def test_arrow_extract_matches_pandas_extract(spark, documents_df, snapshots):
-    from list_extractor_spark.engine.extract import (
-        extract_candidates,
-        extract_candidates_arrow,
+def _reference_candidates(corpus, keys):
+    """Pure-Python extract: the kernel's expected CANDIDATES_SCHEMA rows."""
+    linker = DeferredLinker(keys)
+    rows = Counter()
+    for d in corpus:
+        triples, _ = extract_document(
+            d["doc_id"], [d["res_class"]], d["lang"], d["spans"], linker
+        )
+        rows.update((d["doc_id"], s, p, o, dt, *_sentinel_parts(s)) for s, p, o, dt in triples)
+    return rows
+
+
+def _candidates(df, keys):
+    return Counter(map(tuple, extract_candidates_arrow(df, linkable_keys=keys).collect()))
+
+
+def _documents_schema(span_fields=("kind", "text", "media_ref", "offset"),
+                      spans_nullable=False):
+    span = T.StructType([SPAN_STRUCT[f] for f in span_fields])
+    return T.StructType(
+        [DOCUMENTS_SCHEMA[c] for c in ("doc_id", "lang", "res_class")]
+        + [T.StructField("spans", T.ArrayType(span), spans_nullable)]
     )
 
-    keys = {(lang, s) for (lang, s, w, r) in snapshots["mention_index"]}
-    cols = ["doc_id", "subj", "pred", "obj", "obj_dt", "link_lang", "link_surface"]
-    a = sorted(tuple(r) for r in extract_candidates(documents_df, linkable_keys=keys)
-               .select(cols).collect())
-    b = sorted(tuple(r) for r in extract_candidates_arrow(documents_df, linkable_keys=keys)
-               .select(cols).collect())
-    assert a == b
+
+def test_arrow_extract_matches_python_reference(spark, corpus, documents_df, link_keys):
+    got = _candidates(documents_df, link_keys)
+    assert got and got == _reference_candidates(corpus, link_keys)
+
+
+def test_arrow_extract_reads_span_fields_by_name(spark, link_keys):
+    """A span struct declared in another field order decodes the same."""
+    corpus = make_corpus(6, hub_every=0)
+    rows = [
+        (doc_id, lang, cls, [(t, k, o, m) for k, t, m, o in spans])
+        for doc_id, lang, cls, spans in corpus_to_rows(corpus)
+    ]
+    df = spark.createDataFrame(
+        rows, schema=_documents_schema(("text", "kind", "offset", "media_ref"))
+    )
+    want = _reference_candidates(corpus, link_keys)
+    assert sum(want.values()) == 120
+    assert _candidates(df, link_keys) == want
+
+
+def test_null_spans_document_emits_no_candidates(spark, link_keys):
+    """A NULL spans cell extracts as an empty document: zero rows for it, the
+    other documents' candidates unchanged."""
+    corpus = make_corpus(6, hub_every=0)
+    rows = corpus_to_rows(corpus) + [("Null_spans_doc", "en", "Writer", None)]
+    df = spark.createDataFrame(rows, schema=_documents_schema(spans_nullable=True))
+    got = _candidates(df, link_keys)
+    assert not any(r[0] == "Null_spans_doc" for r in got)
+    assert got == _reference_candidates(corpus, link_keys)
 
 
 def test_build_edges_duplicate_sources_min_wins():

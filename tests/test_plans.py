@@ -4,7 +4,7 @@ broadcast joins in linking, pushdown into parquet scans)."""
 
 from pyspark.sql import functions as F
 
-from list_extractor_spark.engine.extract import extract_candidates
+from list_extractor_spark.engine.extract import extract_candidates_arrow
 from list_extractor_spark.engine.linking import resolve_links, resolve_redirects
 from list_extractor_spark.engine.pipeline import snapshots_to_dfs
 from list_extractor_spark.engine.schemas import DOCUMENTS_SCHEMA
@@ -19,8 +19,34 @@ def test_extract_stage_is_narrow(spark):
     docs = spark.createDataFrame(
         corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
-    plan = _plan(extract_candidates(docs, linkable_keys=set()))
-    assert "Exchange" not in plan, plan  # zero shuffle: scan -> mapInPandas
+    plan = _plan(extract_candidates_arrow(docs, linkable_keys=set()))
+    assert "Exchange" not in plan, plan  # zero shuffle: scan -> mapInArrow
+
+
+def test_extract_kernels_are_map_in_arrow(spark, tmp_path):
+    """Batch, streaming, parse and metrics all run the Arrow kernels."""
+    from list_extractor_spark.engine.extract import extract_metrics, parse_items
+    from list_extractor_spark.engine.pipeline import Pipeline
+    from list_extractor_spark.streaming.stream_extract import (
+        linked_triples,
+        stream_documents,
+    )
+
+    mi, sa, rd = snapshots_to_dfs(spark, make_snapshots())
+    docs = spark.createDataFrame(
+        corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
+    )
+    keys = {(r["lang"], r["surface"]) for r in mi.select("lang", "surface").collect()}
+    # the streaming plan is read before any query starts: analyzed, not executed
+    stream = linked_triples(stream_documents(spark, str(tmp_path)), mi, sa, keys)
+    plans = {
+        "pipeline": _plan(Pipeline(spark).run(docs, mi, sa, rd, linkable_keys=keys)),
+        "stream": stream._jdf.queryExecution().analyzed().toString(),
+        "parse_items": _plan(parse_items(docs)),
+        "extract_metrics": _plan(extract_metrics(docs, linkable_keys=keys)),
+    }
+    for name, plan in plans.items():
+        assert "MapInArrow" in plan and "MapInPandas" not in plan, (name, plan)
 
 
 def test_link_join_is_broadcast(spark):
@@ -30,7 +56,7 @@ def test_link_join_is_broadcast(spark):
         corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
     keys = {(r["lang"], r["surface"]) for r in mi.select("lang", "surface").collect()}
-    cand = extract_candidates(resolve_redirects(docs, rd), linkable_keys=keys)
+    cand = extract_candidates_arrow(resolve_redirects(docs, rd), linkable_keys=keys)
     plan = _plan(resolve_links(cand, mi, sa))
     assert "BroadcastHashJoin" in plan
     # the big (probe) side must not be shuffled for the link joins
@@ -50,7 +76,7 @@ def test_link_join_auto_switches_to_salted_past_threshold(spark):
         corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
     keys = {(r["lang"], r["surface"]) for r in mi.select("lang", "surface").collect()}
-    cand = extract_candidates(resolve_redirects(docs, rd), linkable_keys=keys)
+    cand = extract_candidates_arrow(resolve_redirects(docs, rd), linkable_keys=keys)
     idx = mi.filter(F.col("rank") == 1)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -95,7 +121,7 @@ def test_dedup_is_single_shuffle(spark):
     docs = spark.createDataFrame(
         corpus_to_rows(make_corpus(6, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
-    cand = extract_candidates(docs, linkable_keys=set()).select(
+    cand = extract_candidates_arrow(docs, linkable_keys=set()).select(
         "subj", "pred", "obj", "obj_dt"
     )
     plan = _plan(cand.dropDuplicates(["subj", "pred", "obj", "obj_dt"]))
@@ -202,7 +228,7 @@ def test_salted_link_and_sink_have_no_ansi_abs_hash(spark):
     docs = spark.createDataFrame(
         corpus_to_rows(make_corpus(4, hub_every=0)), schema=DOCUMENTS_SCHEMA
     )
-    cand = extract_candidates(resolve_redirects(docs, rd), linkable_keys=set())
+    cand = extract_candidates_arrow(resolve_redirects(docs, rd), linkable_keys=set())
     plan = _plan(resolve_links(cand, mi, sa, salt=4))
     assert "abs(hash" not in plan, plan
     # and the poison value itself survives pmod (would throw under abs)
@@ -398,7 +424,7 @@ def test_snapshot_joins_degrade_to_shuffle_past_threshold(spark):
     def build():
         d = resolve_redirects(docs, rd)
         d = attach_page_types(d, pt)
-        cand = extract_candidates(d, linkable_keys=keys)
+        cand = extract_candidates_arrow(d, linkable_keys=keys)
         linked = resolve_links(cand, mi, sa)
         return apply_canonical_df(linked, cmap)
 
